@@ -8,28 +8,35 @@ load_stop_times_to_db.py:130-137). The CDC generalization orders by
 split so that a delete beats an older update but loses to a newer one
 (SURVEY.md §7 hard parts, "deletes + LWW interplay").
 
-Three equivalent implementations, chosen for scale behavior:
+Implementations, chosen for scale behavior:
 
-- ``lww_dedup_agg`` (default): ``groupBy(keys).agg(max_by(struct(...),
-  struct(lsn, ts)))``. Hash aggregation with MAP-SIDE PARTIAL COMBINE —
-  each input partition reduces hot keys locally before the shuffle, so
-  a conversation receiving 10^6 updates in one batch ships ~one row per
-  upstream partition instead of 10^6 rows to one reducer. This is the
-  built-in answer to key skew and the reason agg beats window-rank at
-  scale (window requires a full shuffle + sort with no partial reduce).
+- ``lww_dedup_argmax_lsn`` (the ``replay_wal`` and tailer default):
+  a keys+longs ``max(lsn)`` aggregate, broadcast, joined back on the
+  lsn alone — valid under the WAL's globally-unique-lsn contract. The
+  tie-break rides the bucketed write's exchange.
+
+- ``lww_dedup_argmax_join`` (``apply_batch``'s ``dedup="auto"``): the
+  same argmax joined back on the key columns; needs lsn unique only
+  per key.
+
+- ``lww_dedup_agg``: ``groupBy(keys).agg(max_by(struct(...),
+  struct(lsn, ts)))``. Hash aggregation with map-side partial combine,
+  but the struct buffer plans to a sort-based aggregate (measured ~10×
+  slower than argmax on wide payloads).
 
 - ``lww_dedup_window``: the literal reference semantics —
   ``row_number() over (partition by key order by lsn desc, ts desc) = 1``.
   Kept for parity testing and for when the full winning ROW ordering
   matters.
 
-- ``lww_dedup_salted``: explicit two-phase salted plan (SURVEY.md §7
-  step 5): phase 1 reduces per ``(key, salt)`` — spreading a hot key
-  over ``n_salts`` reducers — phase 2 reduces the ≤ n_salts survivors
-  per key. Property-tested identical to the unsalted plans. With the
-  agg implementation Spark's partial combine already does this
-  implicitly; the explicit form documents the plan and covers engines/
-  configs where partial aggregation is unavailable.
+- ``lww_dedup_lag``: one window with ``lag`` instead of a rank — one
+  exchange, one sort, no join. For inputs with only a few rows per key:
+  the merge-on-read resolve of base + deltas (``SnapshotParquetTable.
+  read_stored``).
+
+- ``lww_dedup_window_repart`` and ``lww_dedup_salted``: the
+  single-payload-shuffle and explicit two-phase salted window plans
+  (SURVEY.md §7 step 5), kept as measured alternatives.
 """
 
 from __future__ import annotations
@@ -253,6 +260,39 @@ def lww_dedup_argmax_lsn(
         j.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .select(*key_cols, *payload_cols, *extra)
+    )
+
+
+def lww_dedup_lag(
+    df: DataFrame,
+    key_cols: list[str],
+    lsn_col: str = "lsn",
+    ts_col: str = "ts",
+) -> DataFrame:
+    """One winner row per key from ONE window: partition by key, order
+    by (lsn desc, ts desc), keep the row whose ``lag(lsn)`` is null —
+    the first row of its key (lsn is never null). All columns pass
+    through.
+
+    The plan is one hash exchange on the key and one sort, with no
+    join. It suits inputs holding only a few rows per key, such as the
+    merge-on-read resolve, where a key has at most one row in the base
+    and one per delta: the argmax plans' partial aggregation then drops
+    almost nothing and only adds a second exchange, a join and a
+    tie-break sort. ``lag`` rather than ``row_number``, as in
+    ``lww_dedup_argmax_lsn``: a rank filter makes Spark insert a
+    WindowGroupLimit whose partial phase sorts every row map-side.
+
+    Ties on (lsn, ts) are re-deliveries of one event (same payload), so
+    whichever copy sorts first is THE winner.
+    """
+    w = Window.partitionBy(*key_cols).orderBy(
+        F.col(lsn_col).desc(), F.col(ts_col).desc()
+    )
+    return (
+        df.withColumn("_prev_lsn", F.lag(lsn_col).over(w))
+        .where(F.col("_prev_lsn").isNull())
+        .drop("_prev_lsn")
     )
 
 

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import KEY_COLS, VALUE_COLS
+from ..sources.lake import BUCKET_COL, bucket_expr
 from .dedup import (
     argmax_winner_stats,
     lww_dedup_agg,
@@ -286,14 +287,12 @@ def apply_batch(
         cluster_expr = None
         n_buckets = (man_dict or {}).get("n_buckets")
         if n_buckets:
-            from ..sources.lake import BUCKET_COL, bucket_expr
-
             cluster_expr = bucket_expr(key_cols[0], n_buckets)
         winners = lww_dedup_argmax_lsn(
             batch, key_cols, payload, carry_stats=carry_winners,
             winner_stats=stats_frame, broadcast_keys=broadcast_keys,
             cluster_expr=cluster_expr,
-            cluster_col=BUCKET_COL if cluster_expr is not None else "_bucket",
+            cluster_col=BUCKET_COL,
             cluster_partitions=n_buckets,
         )
         clustered = cluster_expr is not None

@@ -65,6 +65,17 @@ def get_spark(
             "spark.sql.autoBroadcastJoinThreshold",
             os.environ.get("SPARK_GRAFT_BCAST", "134217728"),
         )
+        # a merge-on-read scan passes one path per bucket base and one
+        # per bucket delta (32 buckets at delta depth 3: up to 128
+        # paths). Above this threshold (default 32) Spark lists the
+        # paths with a distributed job, one task per path, before every
+        # scan. The lake commits with os.replace + fsync on a POSIX
+        # filesystem, which the driver lists itself far faster: on a
+        # 4-core VM (local[1]), 96 dirs took 0.1 s on the driver and
+        # 1.6 s through the job, and each further dir adds ~0.4 ms.
+        # 8192 = 1024 buckets (the largest layout the lake describes) x
+        # (1 base + 7 deltas); compact(max_deltas=4) keeps depth <= 5.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.dedup import lww_dedup_lag
+
 BUCKET_COL = "_bucket"
 CURRENT = "CURRENT"
 
@@ -218,9 +220,13 @@ class SnapshotParquetTable:
         schema is that snapshot's, so a pre-evolution read lacks the
         later-added columns exactly as it did then).
         In merge-on-read mode, base and delta files are unioned and
-        resolved to one winner per key by LWW on (_lsn, _ts) — the same
-        argmax-join plan the write-side dedup uses (keys+longs shuffle,
-        payload joined back).
+        resolved to one winner per key by LWW on (_lsn, _ts) with ONE
+        window (``lww_dedup_lag``): one hash exchange on the key and one
+        sort, no join. A key has at most 1 + delta-depth rows here (one
+        in the base, one per delta), so an argmax aggregate would drop
+        almost nothing before its shuffle. Predicates on the key columns
+        (``lookup``) push below the window; any other predicate, such as
+        ``read``'s tombstone filter, stays above it.
         """
         m = self.manifest() if at_version is None else self.manifest_at(at_version)
         schema = T.StructType.fromJson(m["schema"])
@@ -242,20 +248,7 @@ class SnapshotParquetTable:
         df = self.spark.read.schema(schema).parquet(*paths)
         df = df.select([f.name for f in schema.fields])
         if delta_rels:
-            from ..operators.dedup import lww_dedup_argmax_join
-
-            key_cols = m["key_cols"]
-            payload = [f.name for f in schema.fields if f.name not in key_cols]
-            # broadcast_keys=False: the winner-key frame here holds every
-            # distinct key in the TABLE (base+deltas), not a micro-batch —
-            # a forced broadcast of that frame OOMs the moment the table
-            # outgrows executor memory. Both join sides are table-sized,
-            # so the shuffle argmax join is the right plan at any scale
-            # (AQE may still broadcast small tables on its own sizing).
-            df = lww_dedup_argmax_join(
-                df, key_cols, payload, lsn_col="_lsn", ts_col="_ts",
-                broadcast_keys=False,
-            ).select([f.name for f in schema.fields])
+            df = lww_dedup_lag(df, m["key_cols"], lsn_col="_lsn", ts_col="_ts")
         return df
 
     def read(self) -> DataFrame:
@@ -781,7 +774,7 @@ class SnapshotParquetTable:
         one directory per touched bucket — ONE Spark job, no read of the
         target, write volume O(batch) instead of O(table). Out-of-order
         and cross-batch LWW resolve at read time (read_stored); a stale
-        event simply loses the read-side argmax. Outcome split
+        event simply loses the read-side resolve. Outcome split
         (insert vs update vs stale) is therefore not knowable here —
         the stat reports upserts/deletes written instead.
         """
@@ -1015,6 +1008,12 @@ class SnapshotParquetTable:
         would delete the live snapshot); drop every other manifest,
         including abandoned post-rollback ones, and delete data
         directories no kept manifest references. Returns expired versions.
+
+        The data sweep runs on every call, also when no manifest expires,
+        so a call that crashed after removing manifests but before its
+        sweep is finished by the next one. A ``data/vN`` with N above
+        every manifest's version is left alone: it is a write whose
+        manifest has not been committed yet.
         """
         chain = self._chain_versions()
         keep_versions = set(chain[:keep_last])
@@ -1034,14 +1033,14 @@ class SnapshotParquetTable:
                     referenced.add(rel.split(os.sep + BUCKET_COL + "=")[0])
             else:
                 expired.append(man["version"])
-        if not expired:
-            return []
+        newest = self._max_version()
         for v in expired:
             os.remove(self._manifest_path(v))
         if os.path.isdir(self._data_dir):
             for d in os.listdir(self._data_dir):
-                rel = os.path.join("data", d)
-                if rel not in referenced:
+                if d[:1] != "v" or not d[1:].isdigit() or int(d[1:]) > newest:
+                    continue  # not a version dir, or an in-flight write
+                if os.path.join("data", d) not in referenced:
                     shutil.rmtree(os.path.join(self._data_dir, d), ignore_errors=True)
         return sorted(expired)
 

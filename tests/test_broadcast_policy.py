@@ -100,8 +100,8 @@ def test_hint_present_only_when_requested(spark):
 
 def test_mor_read_plan_never_hints_broadcast(tmp_path, spark):
     """The MoR read resolves base+delta LWW over EVERY key in the table
-    — a forced broadcast there is the 100×-scale OOM; the plan must
-    leave join sizing to AQE."""
+    — a forced broadcast there is the 100×-scale OOM; the resolve must
+    never hint one."""
     t = SnapshotParquetTable.create(
         spark, str(tmp_path / "mor"), TRANSCRIPTS_SCHEMA,
         key_cols=["conv_id", "turn_idx"], n_buckets=4, mode="mor",

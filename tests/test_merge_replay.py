@@ -271,3 +271,43 @@ def test_expire_snapshots_and_rollback(tmp_path, spark):
     data_dirs = os.listdir(os.path.join(table.root, "data"))
     # only dirs referenced by kept manifests remain
     assert len(data_dirs) <= 4
+
+
+def test_expire_sweeps_after_crashed_sweep_and_spares_in_flight(
+    tmp_path, spark, monkeypatch
+):
+    """A call that crashed after removing its manifests but before its
+    data sweep leaves unreferenced data dirs behind; the next call
+    reclaims them although no manifest is left to expire. A data dir
+    newer than every manifest (a write whose commit has not landed)
+    survives both calls."""
+    import os
+
+    from open_bus_gtfs_etl_spark.sources import lake
+
+    ev = generate_events(spark, 2000, n_conv=40, seed=61, seg_size=500,
+                         v2_start_lsn=0)
+    wal = str(tmp_path / "wal")
+    segs = write_wal(ev, wal)
+    table = _make_table(spark, tmp_path, n_buckets=4)
+    replay_wal(spark, table, wal, segs)
+    data_dir = os.path.join(table.root, "data")
+    in_flight = f"v{table.snapshot_id() + 1:09d}"
+    os.makedirs(os.path.join(data_dir, in_flight, "_bucket=0"))
+
+    def crash(*a, **k):
+        raise OSError("killed mid-sweep")
+
+    monkeypatch.setattr(lake.shutil, "rmtree", crash)
+    with pytest.raises(OSError, match="mid-sweep"):
+        table.expire_snapshots(keep_last=1)
+    monkeypatch.undo()
+    live = {
+        rel.split(os.sep)[1] for rel in table.manifest()["buckets"].values()
+    }
+    leftover = set(os.listdir(data_dir)) - live - {in_flight}
+    assert leftover, "precondition: the crashed call left orphan dirs"
+
+    assert table.expire_snapshots(keep_last=1) == []
+    assert set(os.listdir(data_dir)) == live | {in_flight}
+    _assert_equal(table, ev.toPandas())

@@ -158,3 +158,132 @@ def test_auto_compact_bounds_delta_depth(tmp_path, spark):
     pd.testing.assert_frame_equal(
         _final(t0), fold_events(ev.toPandas()), check_dtype=False
     )
+
+
+def _raw_union(spark, t):
+    """Every stored row of the current snapshot, base and deltas, before
+    the read-side resolve."""
+    m = t.manifest()
+    rels = list(m["buckets"].values()) + [
+        r for rs in m["deltas"].values() for r in rs
+    ]
+    return spark.read.schema(t.stored_schema()).parquet(
+        *[os.path.join(t.root, r) for r in rels]
+    )
+
+
+def test_mor_resolve_matches_argmax_join_and_oracle(tmp_path, spark):
+    """The one-window resolve picks the same winner per key as the
+    argmax-join resolve it replaced and as the fold oracle, over a table
+    holding cross-delta re-deliveries (same key and lsn in two deltas),
+    same-lsn rows with different ts, tombstones, and a mix of compacted
+    and delta-carrying buckets."""
+    from pyspark.sql import functions as F
+
+    from open_bus_gtfs_etl_spark.operators.dedup import (
+        lww_dedup_argmax_join,
+        lww_dedup_lag,
+    )
+    from open_bus_gtfs_etl_spark.sources.lake import bucket_expr
+
+    t = _mk(spark, tmp_path / "mor", "mor", n_buckets=4)
+    ev0 = generate_events(spark, 3000, n_conv=60, seed=51, v2_start_lsn=0,
+                          dup_rate=0.03, ooo_rate=0.03).drop("seg")
+    ev1 = (
+        generate_events(spark, 2000, n_conv=60, seed=52, v2_start_lsn=0)
+        .drop("seg").withColumn("lsn", F.col("lsn") + 10**6)
+    )
+    redeliver = ev1.where(F.pmod("lsn", F.lit(5)) == 0)
+    later_ts = ev1.where(F.pmod("lsn", F.lit(5)) == 1).withColumns({
+        "ts": F.col("ts") + F.expr("INTERVAL 1 SECOND"),
+        "text": F.concat(F.col("text"), F.lit("*")),
+    })
+    tombstones = ev1.where(F.pmod("lsn", F.lit(5)) == 2).withColumns({
+        "op": F.lit("delete"), "lsn": F.col("lsn") + 10**6,
+    })
+    ev2 = redeliver.unionByName(later_ts).unionByName(tombstones)
+    hot = ev1.where(bucket_expr("conv_id", 4) < 2)
+    ev3 = hot.withColumn("lsn", F.col("lsn") + 3 * 10**6)
+    ev4 = ev3.where(F.pmod("lsn", F.lit(3)) == 0)
+
+    apply_batch(t, ev0, batch_id=0)
+    t.compact()
+    apply_batch(t, ev1, batch_id=1)
+    apply_batch(t, ev2, batch_id=2)
+    apply_batch(t, ev3, batch_id=3)
+    # buckets 0-1 are three deltas deep, 2-3 two: only 0-1 fold back
+    assert t.compact(max_deltas=2) == [0, 1]
+    apply_batch(t, ev4, batch_id=4)
+
+    m = t.manifest()
+    assert set(m["buckets"]) == {"0", "1", "2", "3"}
+    assert {b for b, rs in m["deltas"].items() if rs} == {"0", "1", "2", "3"}
+    raw = _raw_union(spark, t)
+    keys = ["conv_id", "turn_idx"]
+    dup = raw.groupBy(*keys, "_lsn").agg(F.countDistinct("_ts").alias("n_ts"),
+                                         F.count("*").alias("n"))
+    assert dup.where("n_ts = 1 AND n > 1").count() > 0, "no re-deliveries"
+    assert dup.where("n_ts > 1").count() > 0, "no same-lsn ts ties"
+
+    cols = [f.name for f in TRANSCRIPTS_SCHEMA.fields] + ["_lsn", "_ts", "_deleted"]
+    payload = [c for c in cols if c not in keys]
+    old = lww_dedup_argmax_join(raw, keys, payload, lsn_col="_lsn",
+                                ts_col="_ts", broadcast_keys=False)
+    new = t.read_stored()
+    assert new.where("_deleted").count() > 0, "no tombstones survive"
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(cols).collect())
+
+    assert rows(new) == rows(old) == rows(lww_dedup_lag(raw, keys, "_lsn", "_ts"))
+
+    events = pd.concat(
+        [e.toPandas() for e in (ev0, ev1, ev2, ev3, ev4)], ignore_index=True
+    )
+    pd.testing.assert_frame_equal(_final(t), fold_events(events), check_dtype=False)
+
+
+def _mor_with_deltas(spark, root, n_buckets, n_batches):
+    t = _mk(spark, root, "mor", n_buckets=n_buckets)
+    ev = generate_events(spark, 1000 * n_batches, n_conv=80, seed=71,
+                         seg_size=1000, v2_start_lsn=0)
+    wal = os.path.join(str(root), "wal")
+    replay_wal(spark, t, wal, write_wal(ev, wal))
+    return t
+
+
+def test_mor_read_plan_one_exchange_one_sort(tmp_path, spark):
+    """Plan pin: the base+delta resolve is one window — one shuffle
+    exchange on the key, one sort, no join, and no WindowGroupLimit."""
+    t = _mor_with_deltas(spark, tmp_path / "mor", n_buckets=4, n_batches=3)
+    plan = t.read_stored()._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange hashpartitioning(conv_id" in plan, plan
+    assert plan.count("Sort [") == 1, plan
+    assert "Join" not in plan, plan
+    assert "WindowGroupLimit" not in plan, plan
+
+
+def test_mor_scan_lists_paths_on_driver(tmp_path, spark):
+    """A scan over more than 32 bucket-delta dirs (Spark's default
+    parallel-listing threshold) lists them on the driver: no job of the
+    scan has a stage with one task per listed dir."""
+    t = _mor_with_deltas(spark, tmp_path / "mor", n_buckets=16, n_batches=3)
+    n_dirs = sum(len(rs) for rs in t.manifest()["deltas"].values())
+    assert n_dirs > 32, n_dirs
+    sc = spark.sparkContext
+    sc.setJobGroup("mor-scan", "mor-scan")
+    try:
+        t.read().write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup("mor-scan")
+    assert jobs
+    tasks = [
+        st.getStageInfo(s).numTasks
+        for j in jobs
+        for s in st.getJobInfo(j).stageIds
+    ]
+    assert max(tasks) < n_dirs, (n_dirs, tasks)
