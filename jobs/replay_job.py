@@ -38,7 +38,6 @@ def main() -> None:
     ap.add_argument("--lineage")
     ap.add_argument("--n-buckets", type=int, default=256)
     ap.add_argument("--create", action="store_true")
-    ap.add_argument("--salted", action="store_true")
     ap.add_argument("--table-mode", choices=["cow", "mor"], default="cow",
                     help="storage mode when --create: copy-on-write or "
                          "merge-on-read (O(batch) writes + compaction)")
@@ -90,7 +89,7 @@ def main() -> None:
                 if d.startswith("seg=")
             }
         )
-        stats = replay_wal(spark, table, args.wal, segs, salted=args.salted,
+        stats = replay_wal(spark, table, args.wal, segs,
                            auto_compact=args.auto_compact)
         if lineage:
             for st in stats:
@@ -107,7 +106,7 @@ def main() -> None:
         q = start_tailer(
             spark, table, wal_v2_glob(args.wal),
             args.checkpoint or os.path.join(args.table, "_checkpoint"),
-            lineage=lineage, salted=args.salted,
+            lineage=lineage,
             auto_compact=args.auto_compact,
         )
         q.awaitTermination()

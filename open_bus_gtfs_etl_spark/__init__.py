@@ -13,7 +13,7 @@ GC, backfill — is re-expressed here as idiomatic Spark DataFrame programs:
 - ``sources.lake``— LakeTable abstraction (snapshot-parquet backend with
                     atomic manifest commits + batch-id fencing; Iceberg
                     mapping gated behind runtime availability)
-- ``operators``   — LWW dedup (incl. salted two-phase), merge-apply kernel,
+- ``operators``   — LWW dedup (keyed and lsn-keyed argmax), merge-apply kernel,
                     as-of join, text dedup / similarity / quality operators
 - ``streaming``   — Structured Streaming WAL tailer with foreachBatch fenced
                     merge and per-batch/per-partition lineage

@@ -42,7 +42,7 @@ def zipf_rank(u: F.Column, n: int, s: float) -> F.Column:
 
     Continuous inverse-CDF approximation of the Zipf distribution
     (bounded Pareto): rank = (u * (n^(1-s) - 1) + 1)^(1/(1-s)).
-    Hot-conversation skew knob for the salted-merge tests.
+    Hot-conversation skew knob for the hot-key replay tests.
     """
     if abs(s - 1.0) < 1e-9:
         s = 1.000001

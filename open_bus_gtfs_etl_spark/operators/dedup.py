@@ -8,77 +8,34 @@ load_stop_times_to_db.py:130-137). The CDC generalization orders by
 split so that a delete beats an older update but loses to a newer one
 (SURVEY.md §7 hard parts, "deletes + LWW interplay").
 
-Implementations, chosen for scale behavior:
+Implementations:
 
-- ``lww_dedup_argmax_lsn`` (the ``replay_wal`` and tailer default):
-  a keys+longs ``max(lsn)`` aggregate, broadcast, joined back on the
-  lsn alone — valid under the WAL's globally-unique-lsn contract. The
-  tie-break rides the bucketed write's exchange.
+- ``lww_dedup_argmax_lsn`` (``apply_batch``'s ``dedup="argmax_lsn"``,
+  run by ``replay_wal`` and the tailer): a keys+longs ``max(lsn)``
+  aggregate, broadcast, joined back on the lsn alone — valid under the
+  WAL's globally-unique-lsn contract. The tie-break rides the bucketed
+  write's exchange.
 
 - ``lww_dedup_argmax_join`` (``apply_batch``'s ``dedup="auto"``): the
   same argmax joined back on the key columns; needs lsn unique only
-  per key.
-
-- ``lww_dedup_agg``: ``groupBy(keys).agg(max_by(struct(...),
-  struct(lsn, ts)))``. Hash aggregation with map-side partial combine,
-  but the struct buffer plans to a sort-based aggregate (measured ~10×
-  slower than argmax on wide payloads).
-
-- ``lww_dedup_window``: the literal reference semantics —
-  ``row_number() over (partition by key order by lsn desc, ts desc) = 1``.
-  Kept for parity testing and for when the full winning ROW ordering
-  matters.
+  per key. Its longs-only partial aggregation map-side-combines a hot
+  key before the exchange, which is the kernel's skew defence.
 
 - ``lww_dedup_lag``: one window with ``lag`` instead of a rank — one
   exchange, one sort, no join. For inputs with only a few rows per key:
   the merge-on-read resolve of base + deltas (``SnapshotParquetTable.
   read_stored``).
 
-- ``lww_dedup_window_repart`` and ``lww_dedup_salted``: the
-  single-payload-shuffle and explicit two-phase salted window plans
-  (SURVEY.md §7 step 5), kept as measured alternatives.
+- ``lww_dedup_window``: the literal reference semantics —
+  ``row_number() over (partition by key order by lsn desc, ts desc) = 1``.
+  The reference the tests check the other plans against; no engine
+  path runs it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _ord_struct(lsn_col: str = "lsn", ts_col: str = "ts") -> F.Column:
-    return F.struct(F.col(lsn_col), F.col(ts_col))
-
-
-def lww_dedup_agg(
-    df: DataFrame,
-    key_cols: list[str],
-    payload_cols: list[str],
-    lsn_col: str = "lsn",
-    ts_col: str = "ts",
-    carry_stats: bool = False,
-) -> DataFrame:
-    """One winner row per key via max_by — partial-aggregating, skew-robust.
-
-    ``carry_stats`` adds per-key ``_n_dups`` / ``_lsn_min`` / ``_lsn_max``
-    columns in the SAME aggregation pass, so the merge's lineage counters
-    (batch size, lsn range) come for free instead of re-scanning the batch.
-    """
-    aggs = [
-        F.max_by(
-            F.struct(*[F.col(c) for c in payload_cols]), _ord_struct(lsn_col, ts_col)
-        ).alias("_w")
-    ]
-    if carry_stats:
-        aggs += [
-            F.count("*").alias("_n_dups"),
-            F.min(lsn_col).alias("_lsn_min"),
-            F.max(lsn_col).alias("_lsn_max"),
-        ]
-    out = df.groupBy(*key_cols).agg(*aggs)
-    extra = ["_n_dups", "_lsn_min", "_lsn_max"] if carry_stats else []
-    return out.select(
-        *key_cols, *[F.col(f"_w.{c}").alias(c) for c in payload_cols], *extra
-    )
 
 
 def lww_dedup_argmax_join(
@@ -95,8 +52,8 @@ def lww_dedup_argmax_join(
     SortAggregate that ``max_by(struct)`` plans to); phase 2 joins the
     winning lsn back to fetch the payload. Wins when the payload is wide
     (text) and duplication is high: the agg shuffle carries keys+longs
-    only, never text. Requires lsn to be unique per key occurrence
-    (true for a WAL; duplicate deliveries share the lsn AND payload, so
+    only, never text. Needs ``(lsn, ts)`` unique per key event (true
+    for a WAL, where duplicate deliveries share the lsn AND payload, so
     any one of the tied winner rows is THE winner).
 
     ``broadcast_keys`` (default on) hints the keys+longs winner frame
@@ -108,9 +65,12 @@ def lww_dedup_argmax_join(
     distinct keys per micro-batch; pass False beyond that (or when the
     driver's maxResultSize is tight) to fall back to the shuffle join.
 
-    Duplicate-delivery ties (same key AND lsn, identical payload) are
-    broken by a row_number window over ONLY the ~1-per-key post-filter
-    winners — never an aggregation buffer holding the payload.
+    Ties on the winning lsn are broken by ``ts`` desc with a row_number
+    window over ONLY the ~1-per-key post-filter winners — never an
+    aggregation buffer holding the payload. That covers duplicate
+    deliveries (identical rows) and feeds whose lsn repeats within a
+    key with a different ``ts``: the max-``(lsn, ts)`` row wins, as in
+    ``lww_dedup_window``.
     """
     aggs = [F.max(lsn_col).alias("_max_lsn")]
     if carry_stats:
@@ -296,70 +256,17 @@ def lww_dedup_lag(
     )
 
 
-def lww_dedup_window_repart(
-    df: DataFrame,
-    key_cols: list[str],
-    payload_cols: list[str],
-    lsn_col: str = "lsn",
-    ts_col: str = "ts",
-    carry_stats: bool = False,
-) -> DataFrame:
-    """Single-payload-shuffle LWW for bootstrap/full-replay batches.
-
-    Explicitly repartitions by the FIRST key column, then ranks within
-    key. ``HashPartitioning([k0])`` is a subset of the window's
-    ``ClusteredDistribution(key_cols)``, so the rank adds NO second
-    exchange — the payload crosses the wire exactly once. Compare
-    argmax (``lww_dedup_argmax_join``): keys+longs agg shuffle PLUS a
-    driver-serial broadcast build of every winner key PLUS the
-    join-back. For a batch that is mostly UNIQUE keys the join-back
-    filters almost nothing and the winner frame is as big as the batch
-    — this plan deletes both costs. For a high-duplication batch the
-    trade inverts: argmax shuffles only the winners' payload, while
-    this plan moves every wide input row once (measured 2× slower at
-    16M events / 1M keys — see apply_batch's dedup docstring), so it
-    is an explicit opt-in, not the default.
-
-    The clustering survives downstream: the merge's bucketed write
-    (bucket = f(k0)) can write ``partitionBy(bucket)`` directly from
-    these partitions with no bucket repartition (files per bucket ≤
-    shuffle partitions — size ``spark.sql.shuffle.partitions`` to the
-    batch, not the core count). Steady-state incremental merges keep
-    argmax: there the winner set is small, the broadcast is cheap, and
-    the target join dominates.
-
-    ``carry_stats`` computes the per-key counters with whole-partition
-    window frames over the SAME partitioning (no extra shuffle).
-    Skew note: a hot key's rows land in one partition here (sorted,
-    not combined) — for pathologically hot keys use the salted or
-    argmax plan.
-    """
-    out = df.repartition(F.col(key_cols[0]))
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col(lsn_col).desc(), F.col(ts_col).desc()
-    )
-    sel = out.withColumn("_rn", F.row_number().over(w))
-    extra = []
-    if carry_stats:
-        wu = Window.partitionBy(*key_cols)
-        sel = (
-            sel.withColumn("_n_dups", F.count("*").over(wu))
-            .withColumn("_lsn_min", F.min(lsn_col).over(wu))
-            .withColumn("_lsn_max", F.max(lsn_col).over(wu))
-        )
-        extra = ["_n_dups", "_lsn_min", "_lsn_max"]
-    return sel.where(F.col("_rn") == 1).select(
-        *key_cols, *payload_cols, *extra
-    )
-
-
 def lww_dedup_window(
     df: DataFrame,
     key_cols: list[str],
     lsn_col: str = "lsn",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Reference-literal LWW: rank within key, keep row 1 (W4)."""
+    """Reference-literal LWW: rank within key, keep row 1 (W4).
+
+    The test reference for the engine's plans; no engine path runs it
+    (the rank filter makes Spark insert a WindowGroupLimit, and every
+    input row crosses the key exchange)."""
     w = Window.partitionBy(*key_cols).orderBy(F.col(lsn_col).desc(), F.col(ts_col).desc())
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -367,55 +274,3 @@ def lww_dedup_window(
         .drop("_rn")
     )
 
-
-def lww_dedup_salted(
-    df: DataFrame,
-    key_cols: list[str],
-    payload_cols: list[str],
-    lsn_col: str = "lsn",
-    ts_col: str = "ts",
-    n_salts: int = 16,
-) -> DataFrame:
-    """Explicit two-phase salted LWW (hot-key spreading) for the
-    SORT-plan family.
-
-    Salting is the straggler fix for plans that must SORT a key's rows
-    on one reducer (``lww_dedup_window`` / ``_window_repart``): phase 1
-    repartitions by (key, salt = lsn % n_salts) — a hot key's rows
-    split across n_salts sort shards of hot/n_salts rows each — and
-    ranks within the shard; phase 2 re-ranks the ≤ n_salts per-salt
-    winners per key (a shuffle of |keys|·n_salts short rows). The
-    payload crosses the wire once, same as the unsalted window plan.
-
-    Deliberately NOT a ``max_by(struct)`` aggregation: max_by carries
-    an object buffer, so it plans ObjectHashAggregate, which falls back
-    to sort-based aggregation once a partition exceeds
-    ``spark.sql.objectHashAggregate.sortBased.fallbackThreshold``
-    (default 128 groups) — on any real batch that is a guaranteed
-    fallback, i.e. the full sort the salting was meant to avoid plus
-    per-row struct-buffer copies (measured 2–10× slower than this plan
-    and erratic under memory pressure, bench/skew_ab.py). The
-    AGGREGATION plan family (``lww_dedup_argmax_join``, the kernel
-    default) needs no salting at all: its longs-only partial
-    HashAggregate map-side-combines a hot key to ≤ one row per map
-    task before the shuffle.
-
-    Ties: duplicate deliveries share lsn AND payload, so they land in
-    the same salt shard and either copy is THE winner.
-    """
-    p1 = df.withColumn("_salt", F.pmod(F.col(lsn_col), F.lit(n_salts)))
-    # repartition on (key, salt) satisfies the phase-1 window's
-    # required ClusteredDistribution — one exchange, shard-local sort
-    p1 = p1.repartition(*[F.col(c) for c in key_cols], F.col("_salt"))
-    w1 = Window.partitionBy(*key_cols, "_salt").orderBy(
-        F.col(lsn_col).desc(), F.col(ts_col).desc()
-    )
-    per_salt = p1.withColumn("_rn", F.row_number().over(w1)).where(F.col("_rn") == 1)
-    w2 = Window.partitionBy(*key_cols).orderBy(
-        F.col(lsn_col).desc(), F.col(ts_col).desc()
-    )
-    return (
-        per_salt.withColumn("_rn2", F.row_number().over(w2))
-        .where(F.col("_rn2") == 1)
-        .select(*key_cols, *payload_cols)
-    )

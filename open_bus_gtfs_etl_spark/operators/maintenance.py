@@ -46,25 +46,24 @@ def thin_keep_weekly(
     return keep, set(dates) - keep
 
 
-def backfill(spark, table, wal_dir: str, segments: list[int], salted: bool = False):
+def backfill(spark, table, wal_dir: str, segments: list[int]):
     """R2: replay a WAL segment range through the same merge kernel
     (reference load_missing_data.py:16-54 walks a date range and re-runs
     the full pipeline per date). Fencing makes overlap with already-
     applied segments harmless."""
     from .merge import replay_wal
 
-    return replay_wal(spark, table, wal_dir, segments, salted=salted)
+    return replay_wal(spark, table, wal_dir, segments)
 
 
-def reprocess(spark, table, wal_dir: str, from_version: int, segments: list[int],
-              salted: bool = False):
+def reprocess(spark, table, wal_dir: str, from_version: int, segments: list[int]):
     """R1: cascading reprocess = snapshot rollback + state reset + replay
     (reference reprocess_data.py:16-111 deletes derived rows and resets
     gtfs_data flags so processing re-triggers). Roll the table back to
     ``from_version`` — which also rewinds the batch-id fence recorded in
     that manifest — then replay the segment range."""
     table.rollback(from_version)
-    return backfill(spark, table, wal_dir, segments, salted=salted)
+    return backfill(spark, table, wal_dir, segments)
 
 
 def sync_replica(source, replica, writer: str = "replica_sync") -> dict:

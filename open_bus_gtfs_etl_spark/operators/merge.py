@@ -23,11 +23,8 @@ from ..schema import KEY_COLS, VALUE_COLS
 from ..sources.lake import BUCKET_COL, bucket_expr
 from .dedup import (
     argmax_winner_stats,
-    lww_dedup_agg,
     lww_dedup_argmax_join,
     lww_dedup_argmax_lsn,
-    lww_dedup_salted,
-    lww_dedup_window_repart,
 )
 
 
@@ -50,6 +47,14 @@ BROADCAST_KEY_BYTES = 48
 # plus the three lineage counters — see dedup.argmax_winner_stats
 BROADCAST_LSN_BYTES = 32
 
+# the deliberate broadcast hint's cap: above the AQE auto-threshold but
+# well under Spark's 8 GB broadcast hard limit
+BROADCAST_CAP_BYTES = 512 << 20
+
+# apply_batch's dedup plans: keyed argmax, and the lsn-keyed argmax
+# of the WAL contract
+DEDUP_PLANS = ("auto", "argmax_lsn")
+
 
 def observe_winner_count(batch: DataFrame, key_cols: list[str]) -> int:
     """Single-pass HLL estimate of the batch's distinct-key (= winner)
@@ -66,17 +71,17 @@ def observe_winner_count(batch: DataFrame, key_cols: list[str]) -> int:
 
 def resolve_broadcast_keys(
     table,
-    cap_bytes: int = 512 << 20,
+    cap_bytes: int = BROADCAST_CAP_BYTES,
     batch: DataFrame | None = None,
     key_cols: list[str] | None = None,
+    row_bytes: int = BROADCAST_KEY_BYTES,
 ) -> bool:
     """Pick broadcast vs shuffle for the dedup join-back from OBSERVED
     evidence instead of a caller flag: each merge records the winner
     count it measured in-flight (manifest ``last_n_winners``), and the
-    next batch broadcasts only while that count × ~48 B stays under
-    ``cap_bytes`` (default 512 MB — a deliberate hint, so sized above
-    the AQE auto-threshold but well under Spark's 8 GB broadcast hard
-    limit).
+    next batch broadcasts only while that count × ``row_bytes`` (48 B
+    for the keyed winner frame, ``BROADCAST_LSN_BYTES`` for the
+    lsn-keyed one) stays under ``cap_bytes`` (``BROADCAST_CAP_BYTES``).
 
     No-history cases — first batch on a fresh table, or a backend
     without a manifest — never default to broadcast (a 10^9-event
@@ -93,7 +98,7 @@ def resolve_broadcast_keys(
         if batch is None or key_cols is None:
             return False
         est = observe_winner_count(batch, key_cols)
-    return int(est) * BROADCAST_KEY_BYTES <= cap_bytes
+    return int(est) * row_bytes <= cap_bytes
 
 
 def apply_batch(
@@ -102,57 +107,36 @@ def apply_batch(
     batch_id: int,
     key_cols: list[str] | None = None,
     value_cols: list[str] | None = None,
-    salted: bool = False,
-    n_salts: int = 16,
     stats: bool | str = True,
     writer: str = "default",
     auto_evolve: bool = True,
     dedup: str = "auto",
-    discovery: str = "auto",
-    broadcast_keys: bool | str = "auto",
     auto_compact: int | None = None,
 ) -> dict:
     """Apply one micro-batch of change events to ``table``.
 
-    ``dedup`` picks the LWW implementation:
+    ``dedup`` picks the LWW plan; any other value raises ValueError:
 
-    - "auto" (default): currently "argmax" everywhere. Measured
-      head-to-head at 16M events / 1M keys (the CDC steady-state
-      shape, ~15 events per key), argmax replays 2× faster than the
-      single-shuffle window plan (14.1s vs 28.1s at 8 cores,
-      interleaved fresh JVMs): with high in-batch duplication only the
-      WINNERS' payload ever crosses a shuffle under argmax, while the
-      window plan repartitions and sorts every wide input row once.
-    - "argmax": keys+longs aggregation, payload joined back for the
-      winners (max_by(struct) carries the full payload through the
-      aggregation buffer on the non-codegen path and measured ~10×
-      slower at 1KB texts).
-    - "window": ``lww_dedup_window_repart`` — repartition by the first
-      key col + rank; ONE payload shuffle, no winner-key aggregation
-      or broadcast, and the merge write reuses the clustering
-      (``clustered=True``, no bucket repartition). The right plan when
-      the batch is mostly UNIQUE keys (winner ratio ≈ 1, e.g. initial
-      ingest of already-deduped rows), where argmax's join-back
-      filters nothing and its winner frame is as big as the batch.
-    - "agg": max_by — correct for feeds whose lsn is NOT unique per
-      key event, where argmax's winning-lsn join-back could tie.
+    - "auto" (default): keyed argmax (``lww_dedup_argmax_join``) — a
+      keys+longs ``max(lsn)`` aggregation, the winners' payload joined
+      back on the key columns. Needs ``(lsn, ts)`` unique only per key
+      event, so it is right for any feed. With high in-batch duplication only
+      the WINNERS' payload ever crosses a shuffle, and its longs-only
+      partial aggregation map-side-combines a hot key to ≤ 1 row per
+      map task (the kernel's skew defence).
     - "argmax_lsn": argmax whose join-back equi-joins on the winning
       lsn ALONE (``lww_dedup_argmax_lsn``) — requires lsn to be
       GLOBALLY unique across keys (the WAL contract: lsn is the global
       event id). ~3x smaller broadcast (keyless 4-long rows), single
       long probe hash, and the tie-break exchange doubles as the
       bucketed write's clustering, so the winners cross one exchange
-      total. The replay paths (``replay_wal``, bench replay) pick this
-      explicitly; "auto" never does, because apply_batch cannot verify
-      global uniqueness for arbitrary feeds.
+      total. The replay paths (``replay_wal``, the tailer, bench
+      replay) pick this explicitly; "auto" never does, because
+      apply_batch cannot verify global uniqueness for arbitrary feeds.
 
-    ``salted`` routes dedup through the two-phase salted WINDOW plan
-    (hot-key sort-shard splitting). Note the default argmax plan is
-    already skew-neutral — its longs-only partial HashAggregate
-    map-side-combines a hot key to ≤ 1 row per map task — so salting
-    matters only for the sort-family plans ("window" bootstrap with a
-    pathologically hot key); measured trade-offs in BENCH.md's hot-key
-    skew A/B (bench/skew_ab.py).
+    Whether the winner frame is broadcast is decided from evidence
+    (``resolve_broadcast_keys``): the winner count the previous merge
+    recorded, or an observed count on a table with no history.
 
     ``batch`` columns: key cols + value cols + (op, lsn, ts). Returns the
     merge stats dict (plus dedup count when ``stats``). Fencing lives in
@@ -175,6 +159,11 @@ def apply_batch(
     Ignored by backends without ``compact`` (CoW has no deltas; Iceberg
     runs its own rewrite_data_files maintenance).
     """
+    if dedup not in DEDUP_PLANS:
+        raise ValueError(
+            f"dedup must be one of {DEDUP_PLANS} (keyed argmax or the "
+            f"lsn-keyed WAL-contract argmax), got {dedup!r}"
+        )
     key_cols = key_cols or KEY_COLS
     value_cols = value_cols or VALUE_COLS
     if auto_evolve and "schema_ver" in batch.columns:
@@ -190,98 +179,77 @@ def apply_batch(
     batch = align_to_schema(batch, table.stored_schema())
     payload = [c for c in value_cols if c != "ts"] + ["op", "lsn", "ts"]
 
-    if dedup == "auto":
-        # argmax wins at every duplication ratio the CDC feed actually
-        # produces (see docstring); "window" stays an explicit opt-in
-        # for unique-key ingest; "argmax_lsn" is the WAL-contract form
-        # (globally unique lsn) picked explicitly by the replay paths
-        dedup = "argmax"
+    lsn_keyed = dedup == "argmax_lsn"
     stats_frame = None  # persisted winner-stats frame, freed after merge
     src_stats_pre = None  # batch-level source counters, precomputed
     carry_winners = bool(stats)  # winner rows carry per-key counters
     man = getattr(table, "manifest", None)
     man_dict = man() if callable(man) else None
-    if broadcast_keys == "auto":
-        est = (man_dict or {}).get("last_n_winners")
-        per_row = (
-            BROADCAST_LSN_BYTES if dedup == "argmax_lsn" else BROADCAST_KEY_BYTES
-        )
-        cap_bytes = 512 << 20  # same deliberate cap as resolve_broadcast_keys
-        if est is not None:
-            # steady state: sized from the winner count the PREVIOUS
-            # merge observed in-flight — no extra job
-            broadcast_keys = int(est) * per_row <= cap_bytes
-        elif dedup == "argmax_lsn":
-            # bootstrap: the join-back needs the winner aggregation
-            # anyway — persist it and take its EXACT count for the
-            # broadcast decision instead of paying a separate keys-only
-            # HLL scan of the whole batch (guide §1.2/§2.3: one fewer
-            # full pass, and an exact count instead of a ±5% estimate)
-            from pyspark import StorageLevel
+    if lsn_keyed and (man_dict or {}).get("last_n_winners") is None:
+        # bootstrap: the join-back needs the winner aggregation anyway —
+        # persist it and take its EXACT count for the broadcast decision
+        # instead of paying a separate keys-only HLL scan of the whole
+        # batch (guide §1.2/§2.3: one fewer full pass, and an exact
+        # count instead of a ±5% estimate)
+        from pyspark import StorageLevel
 
-            stats_frame = argmax_winner_stats(
-                batch, key_cols, carry_stats=bool(stats)
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            n_winners = stats_frame.count()
-            broadcast_keys = n_winners * per_row <= cap_bytes
-            if not broadcast_keys:
-                # over the cap the lsn-join would shuffle the payload by
-                # lsn AND re-cluster it for the rank — the keyed join's
-                # single keys-exchange (window reuses it) is the right
-                # non-broadcast plan, so fall back to it
-                stats_frame.unpersist()
-                stats_frame = None
-                dedup = "argmax"
-            elif stats is True and man_dict is not None:
-                # SLIM the broadcast to the winning lsns alone (8 B/row
-                # instead of 32): the lineage counters only ever feed
-                # BATCH-level sums in the merge observation when stats
-                # is plain True, so aggregate them here from the
-                # persisted frame (one tiny cached-input job) and hand
-                # them to merge() precomputed. The driver-serial
-                # broadcast build — part of the scaling serial floor —
-                # shrinks ~4x, and the probe-side hash map gets cache-
-                # resident (measured −2.5 s on the 64M join phase at 4
-                # cores). stats="per_bucket" keeps the full carry path:
-                # it wants the per-ROW _src_* values in the files.
-                row = stats_frame.agg(
-                    F.sum("_n_dups").alias("n_source_rows"),
-                    F.min("_lsn_min").alias("lsn_min"),
-                    F.max("_lsn_max").alias("lsn_max"),
-                ).collect()[0]
-                src_stats_pre = {
-                    "n_source_rows": int(row["n_source_rows"] or 0),
-                    "lsn_min": row["lsn_min"],
-                    "lsn_max": row["lsn_max"],
-                }
-                slim = stats_frame.select("_win_lsn").persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-                slim.count()
-                stats_frame.unpersist()
-                stats_frame = slim
-                carry_winners = False
-        else:
-            broadcast_keys = resolve_broadcast_keys(
-                table, batch=batch, key_cols=key_cols
+        stats_frame = argmax_winner_stats(
+            batch, key_cols, carry_stats=bool(stats)
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        n_winners = stats_frame.count()
+        broadcast_keys = n_winners * BROADCAST_LSN_BYTES <= BROADCAST_CAP_BYTES
+        if not broadcast_keys:
+            # over the cap the lsn-join would shuffle the payload by
+            # lsn AND re-cluster it for the rank — the keyed join's
+            # single keys-exchange (window reuses it) is the right
+            # non-broadcast plan, so fall back to it
+            stats_frame.unpersist()
+            stats_frame = None
+            lsn_keyed = False
+        elif stats is True and man_dict is not None:
+            # SLIM the broadcast to the winning lsns alone (8 B/row
+            # instead of 32): the lineage counters only ever feed
+            # BATCH-level sums in the merge observation when stats
+            # is plain True, so aggregate them here from the
+            # persisted frame (one tiny cached-input job) and hand
+            # them to merge() precomputed. The driver-serial
+            # broadcast build — part of the scaling serial floor —
+            # shrinks ~4x, and the probe-side hash map gets cache-
+            # resident (measured −2.5 s on the 64M join phase at 4
+            # cores). stats="per_bucket" keeps the full carry path:
+            # it wants the per-ROW _src_* values in the files.
+            row = stats_frame.agg(
+                F.sum("_n_dups").alias("n_source_rows"),
+                F.min("_lsn_min").alias("lsn_min"),
+                F.max("_lsn_max").alias("lsn_max"),
+            ).collect()[0]
+            src_stats_pre = {
+                "n_source_rows": int(row["n_source_rows"] or 0),
+                "lsn_min": row["lsn_min"],
+                "lsn_max": row["lsn_max"],
+            }
+            slim = stats_frame.select("_win_lsn").persist(
+                StorageLevel.MEMORY_AND_DISK
             )
-    clustered = False
-    if salted:
-        winners = lww_dedup_salted(batch, key_cols, payload, n_salts=n_salts)
-    elif dedup == "window":
-        winners = lww_dedup_window_repart(
-            batch, key_cols, payload, carry_stats=bool(stats)
+            slim.count()
+            stats_frame.unpersist()
+            stats_frame = slim
+            carry_winners = False
+    else:
+        # sized from the winner count the PREVIOUS merge observed
+        # in-flight (no extra job); only a keyed merge into a table with
+        # no history pays a keys-only observation pass
+        broadcast_keys = resolve_broadcast_keys(
+            table, batch=batch, key_cols=key_cols,
+            row_bytes=BROADCAST_LSN_BYTES if lsn_keyed else BROADCAST_KEY_BYTES,
         )
-        clustered = True
-    elif dedup == "argmax_lsn":
+    if lsn_keyed:
         # WAL contract (globally unique lsn): single-long broadcast
         # join-back. When the table's bucket layout is known, the
         # tie-break clusters by the BUCKET expression — the exchange
         # the bucketed write needs anyway — so the winners' payload
         # crosses one exchange + one sort end-to-end instead of two
-        # (guide §2.4; see lww_dedup_argmax_lsn). Unlike the earlier
-        # rejected clustered=True attempt (dedup partitions keyed by
-        # lsn → partitions × buckets small files), partitioning BY the
+        # (guide §2.4; see lww_dedup_argmax_lsn). Partitioning BY the
         # bucket value maps each bucket wholly to one task, so the
         # write still produces exactly one file per bucket.
         cluster_expr = None
@@ -295,22 +263,18 @@ def apply_batch(
             cluster_col=BUCKET_COL,
             cluster_partitions=n_buckets,
         )
-        clustered = cluster_expr is not None
-    elif dedup == "argmax":
+    else:
         # carry_stats folds batch-size/lsn-range counters into the same
         # aggregation pass — no second scan of the batch for lineage
         winners = lww_dedup_argmax_join(
             batch, key_cols, payload, carry_stats=bool(stats),
             broadcast_keys=broadcast_keys,
         )
-    else:
-        winners = lww_dedup_agg(batch, key_cols, payload, carry_stats=bool(stats))
 
     try:
         kw = {"src_stats": src_stats_pre} if src_stats_pre is not None else {}
         st = table.merge(
-            winners, batch_id=batch_id, stats=stats, writer=writer,
-            discovery=discovery, clustered=clustered, **kw,
+            winners, batch_id=batch_id, stats=stats, writer=writer, **kw,
         )
     finally:
         if stats_frame is not None:
@@ -371,8 +335,6 @@ def replay_wal(
     table,
     wal_dir: str,
     segments: list[int],
-    salted: bool = False,
-    start_batch_id: int | None = None,
     writer: str = "wal",
     validate: bool = False,
     lineage=None,
@@ -380,7 +342,6 @@ def replay_wal(
     min_plausible_rows: int | None = None,
     max_lsn_gap: int | None = None,
     auto_compact: int | None = None,
-    dedup: str = "argmax_lsn",
 ) -> list[dict]:
     """Batch replay of a WAL segment range through the merge kernel —
     the backfill path (reference R2, load_missing_data.py:16-54: walk a
@@ -432,10 +393,10 @@ def replay_wal(
         st = apply_batch(
             table, batch,
             batch_id=None if newest_first else seg,
-            salted=salted, writer=writer, auto_compact=auto_compact,
+            writer=writer, auto_compact=auto_compact,
             # WAL segments satisfy the globally-unique-lsn contract
             # (lsn = global event id), so the lsn-keyed argmax applies
-            dedup=dedup,
+            dedup="argmax_lsn",
         )
         st["batch_id"] = seg
         if min_plausible_rows is not None and not st.get("skipped_fenced"):

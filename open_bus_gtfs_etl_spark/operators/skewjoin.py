@@ -2,7 +2,8 @@
 
 The north rule's "hot-conversation skew handled by salted
 repartitioning" applied to the JOIN operator itself (the merge path's
-salted two-phase dedup lives in operators/dedup.py): when the build
+dedup needs no salting: its argmax partial aggregation combines a hot
+key map-side, operators/dedup.py): when the build
 side is too large to broadcast and the probe side's join key is
 skewed, a plain shuffle join sends every row of a hot key to ONE
 reducer — at 100 TB a single hot domain/conversation key can be

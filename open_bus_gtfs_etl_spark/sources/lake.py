@@ -414,8 +414,6 @@ class SnapshotParquetTable:
         batch_id: int,
         stats: bool | str = True,
         writer: str = "default",
-        discovery: str = "auto",
-        clustered: bool = False,
         src_stats: dict | None = None,
     ) -> dict:
         """Copy-on-write MERGE of a pre-deduplicated batch of winners.
@@ -439,21 +437,10 @@ class SnapshotParquetTable:
         namespaced per writer so batch replay (WAL segment ids) and each
         streaming checkpoint (epoch ids) never fence each other out.
 
-        ``discovery`` controls how the touched-bucket set is found:
-
-        - ``"exact"``: materialize the winners (persist + count, the
-          bucket set rides that job as an Observation), then join ONLY
-          the touched buckets — minimal read/write volume when the
-          batch touches few buckets.
-        - ``"all"``: skip the materialization barrier and join every
-          bucket — ONE Spark job end to end (dedup → join → write), no
-          cache write, no job gap. Right when the batch is known to
-          touch ~all buckets (large batches over skewed keys do: the
-          steady-state shape at 10^8-event micro-batches), where exact
-          discovery saves no I/O and its serial barrier caps scaling.
-        - ``"auto"`` (default): ``"all"`` for the bootstrap merge into
-          an empty table (everything is touched by definition),
-          ``"exact"`` afterwards.
+        Touched buckets: a merge into a populated table materializes
+        the winners (persist + count, the bucket set rides that job as
+        an Observation), then joins ONLY the touched buckets — minimal
+        read/write volume when the batch touches few buckets.
 
         Bootstrap (empty table) skips the target join entirely — the
         merge is a pure source projection (every winner inserts, or
@@ -462,12 +449,11 @@ class SnapshotParquetTable:
         but making it explicit guarantees the plan and the outcome
         column without relying on an optimizer rule.
 
-        ``clustered`` declares that ``winners`` is ALREADY hash-
-        clustered by ``key_cols[0]`` (the fused window-dedup plan does
-        this) — the bucketed write then writes ``partitionBy(bucket)``
-        straight from those partitions instead of paying a second
-        payload shuffle on the bucket key. Files per bucket become ≤
-        the shuffle partition count (size partitions to the batch).
+        A ``winners`` frame that already carries ``BUCKET_COL`` (the
+        bucket-clustered ``lww_dedup_argmax_lsn`` tie-break) is
+        clustered by bucket: a bootstrap then writes
+        ``partitionBy(bucket)`` straight from those partitions instead
+        of paying a second payload shuffle on the bucket key.
         """
         m = self.manifest()
         fences = dict(m.get("fences", {}))
@@ -486,9 +472,7 @@ class SnapshotParquetTable:
             }
 
         if m.get("mode") == "mor":
-            return self._merge_mor(
-                winners, batch_id, m, stats, writer, clustered, src_stats
-            )
+            return self._merge_mor(winners, batch_id, m, stats, writer, src_stats)
 
         key_cols = m["key_cols"]
         user_cols = m["user_cols"]
@@ -500,9 +484,10 @@ class SnapshotParquetTable:
         # clustered argmax tie-break) keeps its attribute: recomputing
         # the expression would discard the partitioning/ordering
         # metadata the clustered write path relies on
+        clustered = BUCKET_COL in winners.columns
         src = (
             winners
-            if BUCKET_COL in winners.columns
+            if clustered
             else winners.withColumn(
                 BUCKET_COL, bucket_expr(key_cols[0], n_buckets)
             )
@@ -531,15 +516,12 @@ class SnapshotParquetTable:
                 F.max("_lsn_max").alias("lsn_max"),
             ]
         bootstrap = not m["buckets"]
-        exact = not bootstrap and (
-            discovery == "exact" or (discovery == "auto" and bool(m["buckets"]))
-        )
         if bootstrap:
             # empty target: no join at all — every winner inserts (or
             # tombstones); the observation rides the write job
             src = src.observe(obs_src, *src_exprs)
             touched = sorted(range(n_buckets))
-        elif exact:
+        else:
             # the winners frame feeds two consumers (bucket discovery,
             # the rewrite join) — persist once instead of recomputing
             # the dedup shuffle twice
@@ -550,13 +532,6 @@ class SnapshotParquetTable:
             obs_stats = obs_src.get
             touched = sorted(obs_stats["touched"])
             tgt = self.read_stored(buckets=touched)
-        else:
-            # one-job path: the observation fires inside the write job,
-            # the join reads every bucket, nothing is cached and there
-            # is no job barrier between dedup and write
-            src = src.observe(obs_src, *src_exprs)
-            touched = sorted(range(n_buckets))
-            tgt = self.read_stored()
 
         if bootstrap:
             is_del = F.col("op") == "delete"
@@ -666,13 +641,13 @@ class SnapshotParquetTable:
         rel_data = os.path.join("data", f"v{new_version:09d}")
         out_path = os.path.join(self.root, rel_data)
         if clustered and bootstrap:
-            # winners are already hash-clustered by key_cols[0] (fused
-            # window dedup): bucket = f(key_cols[0]) is constant within
-            # a key, so partitionBy can split the existing partitions
-            # directly — no second payload shuffle. Sorting bucket-first
-            # satisfies the writer's required ordering (no writer-side
-            # re-sort). After a join (non-bootstrap) clustering is gone,
-            # so the hint only applies to the bootstrap projection.
+            # winners are already clustered by bucket (the argmax_lsn
+            # tie-break), so partitionBy can split the existing
+            # partitions directly — no second payload shuffle. Sorting
+            # bucket-first satisfies the writer's required ordering (no
+            # writer-side re-sort). After a join (non-bootstrap)
+            # clustering is gone, so this only applies to the bootstrap
+            # projection.
             out_df = merged.sortWithinPartitions(BUCKET_COL, *key_cols)
         else:
             out_df = merged.repartition(
@@ -683,7 +658,7 @@ class SnapshotParquetTable:
             .partitionBy(BUCKET_COL)
             .parquet(out_path)
         )
-        if not exact:
+        if bootstrap:
             obs_stats = obs_src.get  # fired inside the write job
 
         stat = {"skipped_fenced": False, "version": new_version}
@@ -756,7 +731,7 @@ class SnapshotParquetTable:
             "parent": m["version"],
         }
         self._write_manifest(new_manifest)
-        if exact:
+        if not bootstrap:
             src.unpersist()
         return stat
 
@@ -767,7 +742,6 @@ class SnapshotParquetTable:
         m: dict,
         stats: bool | str,
         writer: str,
-        clustered: bool = False,
         src_stats: dict | None = None,
     ) -> dict:
         """Merge-on-read apply: append the deduped winners as a DELTA,
@@ -820,7 +794,8 @@ class SnapshotParquetTable:
                 )
             else:
                 cols.append(F.lit(None).cast(types[name]).alias(name))
-        if BUCKET_COL in winners.columns:
+        clustered = BUCKET_COL in winners.columns
+        if clustered:
             # keep the existing attribute (partitioning/ordering
             # metadata) from the bucket-clustered tie-break
             delta = winners.select(*cols, F.col(BUCKET_COL))
@@ -847,8 +822,8 @@ class SnapshotParquetTable:
         rel_data = os.path.join("data", f"v{new_version:09d}")
         out_path = os.path.join(self.root, rel_data)
         if clustered:
-            # MoR never joins the target, so the fused window dedup's
-            # key clustering always survives to the delta write
+            # MoR never joins the target, so the tie-break's bucket
+            # clustering always survives to the delta write
             out_df = delta.sortWithinPartitions(BUCKET_COL, *key_cols)
         else:
             out_df = delta.repartition(
@@ -1339,12 +1314,9 @@ class IcebergTable:
         self.value_cols = value_cols or ["role", "text", "tool", "ts"]
 
     def merge(self, winners, batch_id: int, stats: bool = True,
-              writer: str = "default", discovery: str = "auto",
-              clustered: bool = False) -> dict:
-        # ``discovery``/``clustered`` are accepted for LakeTable
-        # interface parity; Iceberg's MERGE plans its own file pruning
-        # (metadata min/max) and write distribution (TBLPROPERTIES
-        # write.distribution-mode)
+              writer: str = "default") -> dict:
+        # Iceberg's MERGE plans its own file pruning (metadata min/max)
+        # and write distribution (TBLPROPERTIES write.distribution-mode)
         fence = self._fences().get(writer, -1)
         if batch_id is not None and batch_id <= fence:
             return {"skipped_fenced": True}

@@ -52,7 +52,6 @@ def start_tailer(
     wal_glob: str,
     checkpoint_dir: str,
     lineage=None,
-    salted: bool = False,
     max_files_per_trigger: int | None = None,
     available_now: bool = False,
     max_retries: int = 2,
@@ -90,7 +89,7 @@ def start_tailer(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = reader.parquet(wal_glob)
     return _start(
-        stream, table, checkpoint_dir, lineage, salted, available_now,
+        stream, table, checkpoint_dir, lineage, available_now,
         max_retries, retry_backoff_sec, auto_compact,
     )
 
@@ -102,7 +101,6 @@ def start_multi_tailer(
     checkpoint_dir: str,
     versions: list[int] | None = None,
     lineage=None,
-    salted: bool = False,
     max_files_per_trigger: int | None = None,
     available_now: bool = False,
     max_retries: int = 2,
@@ -163,7 +161,7 @@ def start_multi_tailer(
         )
         stream = part if stream is None else stream.unionByName(part)
     return _start(
-        stream, table, checkpoint_dir, lineage, salted, available_now,
+        stream, table, checkpoint_dir, lineage, available_now,
         max_retries, retry_backoff_sec, auto_compact,
     )
 
@@ -205,7 +203,7 @@ def _pin_versions(checkpoint_dir: str, versions: list[int]) -> None:
 
 
 def _start(
-    stream, table, checkpoint_dir, lineage, salted, available_now,
+    stream, table, checkpoint_dir, lineage, available_now,
     max_retries, retry_backoff_sec, auto_compact=None,
 ):
     """Shared tail: fenced/retrying foreachBatch merge + checkpoint."""
@@ -218,7 +216,7 @@ def _start(
                 # "per_bucket" buys the per-partition lineage breakdown
                 # for one cheap columnar job per (small) streaming batch
                 st = apply_batch(
-                    table, batch_df, batch_id=batch_id, salted=salted,
+                    table, batch_df, batch_id=batch_id,
                     writer=fence_writer,
                     stats="per_bucket" if lineage is not None else True,
                     auto_compact=auto_compact,

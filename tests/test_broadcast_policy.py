@@ -142,8 +142,7 @@ class _IcebergShapedTable:
     def stored_schema(self):
         return T.StructType(STORED_TRANSCRIPTS_SCHEMA.fields)
 
-    def merge(self, winners, batch_id, stats=True, writer="default",
-              discovery="auto", clustered=False):
+    def merge(self, winners, batch_id, stats=True, writer="default"):
         self.merged += 1
         return {"skipped_fenced": False}
 

@@ -160,7 +160,6 @@ def test_changes_bucket_pruning(tmp_path, spark):
     v1 = t.snapshot_id()
     apply_batch(
         t, _mk(spark, [(5, "update", "c-1", 0, "user", "edited")]), batch_id=1,
-        discovery="exact",
     )
     v2 = t.snapshot_id()
     ch = t.changes_between(v1, v2)

@@ -40,15 +40,14 @@ def _assert_equal(table, events_pdf):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-@pytest.mark.parametrize("salted", [False, True])
-def test_replay_matches_oracle(tmp_path, spark, salted):
+def test_replay_matches_oracle(tmp_path, spark):
     events = generate_events(
         spark, 10_000, n_conv=200, seed=42, dup_rate=0.05, ooo_rate=0.05, seg_size=2000
     )
     wal = str(tmp_path / "wal")
     segs = write_wal(events, wal)
     table = _make_table(spark, tmp_path)
-    replay_wal(spark, table, wal, segs, salted=salted)
+    replay_wal(spark, table, wal, segs)
     _assert_equal(table, events.toPandas())
 
 

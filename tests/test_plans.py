@@ -44,20 +44,26 @@ def test_broadcast_join_chosen(spark):
 
 
 def test_dedup_has_partial_aggregation(spark):
-    """The LWW dedup must run as partial + final hash aggregation —
-    the map-side combine IS the skew defense at 100 TB."""
+    """The keyed LWW dedup must run as partial + final hash aggregation
+    of ``max(lsn)`` — the map-side combine before the key exchange IS
+    the skew defense at 100 TB (a hot key reaches the exchange as ≤ 1
+    row per map task)."""
     from open_bus_gtfs_etl_spark.genlog import generate_events
-    from open_bus_gtfs_etl_spark.operators.dedup import lww_dedup_agg
+    from open_bus_gtfs_etl_spark.operators.dedup import lww_dedup_argmax_join
 
     ev = generate_events(spark, 1000, seed=1)
-    w = lww_dedup_agg(
+    w = lww_dedup_argmax_join(
         ev, ["conv_id", "turn_idx"], ["role", "text", "op", "lsn", "ts"]
     )
-    plan = _plan(w)
-    # max_by(struct) currently plans as SortAggregate; what matters for
-    # skew is the PARTIAL phase before the exchange (map-side combine)
-    assert "partial_max_by" in plan, "expected partial (map-side) aggregation"
-    assert plan.count("Aggregate") >= 2, "expected partial+final aggregation"
+    lines = _plan(w).splitlines()
+    partial = [i for i, ln in enumerate(lines) if "partial_max(lsn" in ln]
+    assert partial, "expected partial (map-side) aggregation"
+    i = partial[0]
+    # plan text lists a child under its parent: the partial aggregate
+    # sits directly below the key exchange, the final one directly above
+    assert "HashAggregate" in lines[i], lines[i]
+    assert "Exchange hashpartitioning(conv_id" in lines[i - 1], lines[i - 1]
+    assert "functions=[max(lsn" in lines[i - 2], lines[i - 2]
 
 
 def test_topk_uses_take_ordered(spark):

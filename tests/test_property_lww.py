@@ -81,41 +81,45 @@ def _rows(delivered, idxs):
 )
 @given(log=event_logs())
 def test_any_log_any_batching_matches_oracle(spark, log):
+    """Each example runs through both dedup plans: keyed argmax
+    ("auto") and the lsn-keyed argmax ("argmax_lsn") — the logs'
+    lsns are globally unique by construction, as that plan needs."""
     delivered, order, cuts = log
-    with tempfile.TemporaryDirectory() as tmp:
-        table = SnapshotParquetTable.create(
-            spark, f"{tmp}/lake", TRANSCRIPTS_SCHEMA,
-            key_cols=["conv_id", "turn_idx"], n_buckets=2,
+    all_rows = _rows(delivered, order)
+    want = fold_events(
+        pd.DataFrame(
+            all_rows,
+            columns=["lsn", "op", "conv_id", "turn_idx", "role", "text"],
+        ).assign(
+            ts=lambda d: pd.to_datetime(d["lsn"], unit="s"),
+            tool=None,
         )
-        bounds = [0, *cuts, len(order)]
-        for b, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
-            rows = _rows(delivered, order[lo:hi])
-            if not rows:
-                continue
-            batch = (
-                spark.createDataFrame(
-                    rows,
-                    "lsn long, op string, conv_id string, turn_idx int,"
-                    " role string, text string",
+    )
+    bounds = [0, *cuts, len(order)]
+    for dedup in ("auto", "argmax_lsn"):
+        with tempfile.TemporaryDirectory() as tmp:
+            table = SnapshotParquetTable.create(
+                spark, f"{tmp}/lake", TRANSCRIPTS_SCHEMA,
+                key_cols=["conv_id", "turn_idx"], n_buckets=2,
+            )
+            for b, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
+                rows = _rows(delivered, order[lo:hi])
+                if not rows:
+                    continue
+                batch = (
+                    spark.createDataFrame(
+                        rows,
+                        "lsn long, op string, conv_id string, turn_idx int,"
+                        " role string, text string",
+                    )
+                    .withColumn("ts", F.timestamp_seconds(F.col("lsn")))
+                    .withColumn("tool", F.lit(None).cast("string"))
                 )
-                .withColumn("ts", F.timestamp_seconds(F.col("lsn")))
-                .withColumn("tool", F.lit(None).cast("string"))
+                apply_batch(table, batch, batch_id=b, dedup=dedup)
+            got = (
+                table.read()
+                .toPandas()
+                .sort_values(["conv_id", "turn_idx"], kind="stable")
+                .reset_index(drop=True)
             )
-            apply_batch(table, batch, batch_id=b)
-        got = (
-            table.read()
-            .toPandas()
-            .sort_values(["conv_id", "turn_idx"], kind="stable")
-            .reset_index(drop=True)
-        )
-        all_rows = _rows(delivered, order)
-        want = fold_events(
-            pd.DataFrame(
-                all_rows,
-                columns=["lsn", "op", "conv_id", "turn_idx", "role", "text"],
-            ).assign(
-                ts=lambda d: pd.to_datetime(d["lsn"], unit="s"),
-                tool=None,
-            )
-        )
-        pd.testing.assert_frame_equal(got, want, check_dtype=False)
+        pd.testing.assert_frame_equal(got, want, check_dtype=False, obj=dedup)
