@@ -169,13 +169,16 @@ def lww_dedup_argmax_lsn(
     caller knows the downstream clustering (the merge's bucket column,
     a pure function of ``key_cols[0]``), the tie-break rides THAT
     exchange instead of adding its own. The survivors are repartitioned
-    by the bucket expression (the exchange the bucketed write needs
-    anyway), and ties collapse with a ``lag`` window partitioned by
+    BY ID on the bucket value into ``cluster_partitions`` partitions
+    (required with ``cluster_expr``): bucket ``b`` goes to partition
+    ``b mod cluster_partitions``, so each task holds whole buckets and
+    the write still produces one file per bucket however few tasks the
+    batch gets. Ties then collapse with a ``lag`` window partitioned by
     ``(bucket, *key_cols)``:
 
-    - ``HashPartitioning([bucket])`` is a subset of the window's
-      ``ClusteredDistribution([bucket, *keys])``, so the window adds NO
-      exchange;
+    - the partition-id pass-through on ``[bucket]`` satisfies the
+      window's ``ClusteredDistribution([bucket, *keys])``, so the window
+      adds NO exchange;
     - after the join-back every surviving row of a key carries that
       key's single winning lsn, so ``lag(lsn) IS NULL`` keeps exactly
       the first row of each (bucket, key) group — same survivor set as
@@ -202,11 +205,9 @@ def lww_dedup_argmax_lsn(
     j = df.join(side, F.col(lsn_col) == F.col("_win_lsn"), "inner")
     extra = ["_n_dups", "_lsn_min", "_lsn_max"] if carry_stats else []
     if cluster_expr is not None:
-        j = j.withColumn(cluster_col, cluster_expr)
-        if cluster_partitions:
-            j = j.repartition(cluster_partitions, F.col(cluster_col))
-        else:
-            j = j.repartition(F.col(cluster_col))
+        j = j.withColumn(cluster_col, cluster_expr).repartitionById(
+            cluster_partitions, F.col(cluster_col)
+        )
         w = Window.partitionBy(cluster_col, *key_cols).orderBy(
             F.col(ts_col).desc()
         )

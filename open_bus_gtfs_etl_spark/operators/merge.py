@@ -16,11 +16,13 @@ loaders — here there is one generalized keyed upsert):
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import KEY_COLS, VALUE_COLS
-from ..sources.lake import BUCKET_COL, bucket_expr
+from ..sources.lake import BUCKET_COL, bucket_expr, bucket_partitions
 from .dedup import (
     argmax_winner_stats,
     lww_dedup_argmax_join,
@@ -158,12 +160,17 @@ def apply_batch(
     leaves compaction to the caller; fenced/no-op merges never compact.
     Ignored by backends without ``compact`` (CoW has no deltas; Iceberg
     runs its own rewrite_data_files maintenance).
+
+    The stats also carry ``started_at`` and ``completed_at`` (naive UTC,
+    the driver's wall clock around the whole call, compaction included)
+    for ``LineageLog.record``.
     """
     if dedup not in DEDUP_PLANS:
         raise ValueError(
             f"dedup must be one of {DEDUP_PLANS} (keyed argmax or the "
             f"lsn-keyed WAL-contract argmax), got {dedup!r}"
         )
+    started_at = datetime.now(timezone.utc).replace(tzinfo=None)
     key_cols = key_cols or KEY_COLS
     value_cols = value_cols or VALUE_COLS
     if auto_evolve and "schema_ver" in batch.columns:
@@ -249,19 +256,22 @@ def apply_batch(
         # tie-break clusters by the BUCKET expression — the exchange
         # the bucketed write needs anyway — so the winners' payload
         # crosses one exchange + one sort end-to-end instead of two
-        # (guide §2.4; see lww_dedup_argmax_lsn). Partitioning BY the
-        # bucket value maps each bucket wholly to one task, so the
-        # write still produces exactly one file per bucket.
-        cluster_expr = None
+        # (guide §2.4; see lww_dedup_argmax_lsn). The exchange routes
+        # bucket b to partition b mod k (k from bucket_partitions: the
+        # session's shuffle width, at most the bucket count), so each
+        # task holds whole buckets and the write still produces exactly
+        # one file per bucket.
+        cluster_expr = k = None
         n_buckets = (man_dict or {}).get("n_buckets")
         if n_buckets:
             cluster_expr = bucket_expr(key_cols[0], n_buckets)
+            k = bucket_partitions(batch.sparkSession, n_buckets)
         winners = lww_dedup_argmax_lsn(
             batch, key_cols, payload, carry_stats=carry_winners,
             winner_stats=stats_frame, broadcast_keys=broadcast_keys,
             cluster_expr=cluster_expr,
             cluster_col=BUCKET_COL,
-            cluster_partitions=n_buckets,
+            cluster_partitions=k,
         )
     else:
         # carry_stats folds batch-size/lsn-range counters into the same
@@ -305,6 +315,8 @@ def apply_batch(
         and hasattr(table, "compact")
     ):
         st["compacted_buckets"] = table.compact(max_deltas=auto_compact)
+    st["started_at"] = started_at
+    st["completed_at"] = datetime.now(timezone.utc).replace(tzinfo=None)
     return st
 
 

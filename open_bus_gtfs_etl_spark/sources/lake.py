@@ -46,9 +46,34 @@ BUCKET_COL = "_bucket"
 CURRENT = "CURRENT"
 
 
-def bucket_expr(key_col: str, n_buckets: int) -> F.Column:
-    """Deterministic hash bucket for a key column (non-negative)."""
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+def bucket_expr(key: str | F.Column, n_buckets: int) -> F.Column:
+    """Deterministic hash bucket (non-negative) of a key column, given
+    by name or as a Column (a typed literal, for a point lookup)."""
+    col = F.col(key) if isinstance(key, str) else key
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
+
+
+def bucket_partitions(spark: SparkSession, n_buckets: int) -> int:
+    """Width of a bucket-keyed exchange: the buckets the write can
+    touch, capped at ``spark.sql.shuffle.partitions`` (the width of
+    every other exchange in the merge). Used with ``repartitionById``,
+    bucket ``b`` lands in partition ``b mod k``: each task holds whole
+    buckets, so ``partitionBy(BUCKET_COL)`` still writes one file per
+    bucket, while a small batch pays a few tasks rather than one per
+    bucket. AQE never coalesces a by-number exchange, so the width has
+    to be right when the plan is built."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(n_buckets, cap))
+
+
+def cluster_by_bucket(df: DataFrame, n_buckets: int, key_cols: list[str]) -> DataFrame:
+    """``df`` (carrying ``BUCKET_COL``) laid out for a bucketed write:
+    whole buckets per task (``bucket_partitions``), sorted by bucket
+    then key — the writer's required order, so it adds no sort."""
+    k = bucket_partitions(df.sparkSession, n_buckets)
+    return df.repartitionById(k, F.col(BUCKET_COL)).sortWithinPartitions(
+        BUCKET_COL, *key_cols
+    )
 
 
 class SnapshotParquetTable:
@@ -286,9 +311,7 @@ class SnapshotParquetTable:
             raise ValueError(f"lookup key must include bucketing column {kc!r}")
         ktype = {f.name: f.dataType for f in self.stored_schema().fields}[kc]
         b = self.spark.range(1).select(
-            F.pmod(
-                F.xxhash64(F.lit(key[kc]).cast(ktype)), F.lit(m["n_buckets"])
-            ).cast("int").alias("b")
+            bucket_expr(F.lit(key[kc]).cast(ktype), m["n_buckets"]).alias("b")
         ).first()["b"]
         df = self.read_stored(buckets=[b])
         for c, v in key.items():
@@ -453,7 +476,10 @@ class SnapshotParquetTable:
         bucket-clustered ``lww_dedup_argmax_lsn`` tie-break) is
         clustered by bucket: a bootstrap then writes
         ``partitionBy(bucket)`` straight from those partitions instead
-        of paying a second payload shuffle on the bucket key.
+        of paying a second payload shuffle on the bucket key. Every
+        other write lays its rows out with ``cluster_by_bucket``. Either
+        way each task holds whole buckets, so each touched bucket gets
+        exactly one file.
         """
         m = self.manifest()
         fences = dict(m.get("fences", {}))
@@ -642,17 +668,16 @@ class SnapshotParquetTable:
         out_path = os.path.join(self.root, rel_data)
         if clustered and bootstrap:
             # winners are already clustered by bucket (the argmax_lsn
-            # tie-break), so partitionBy can split the existing
-            # partitions directly — no second payload shuffle. Sorting
+            # tie-break routes whole buckets to each of its tasks), so
+            # partitionBy can split the existing partitions directly —
+            # one file per bucket, no second payload shuffle. Sorting
             # bucket-first satisfies the writer's required ordering (no
             # writer-side re-sort). After a join (non-bootstrap)
             # clustering is gone, so this only applies to the bootstrap
             # projection.
             out_df = merged.sortWithinPartitions(BUCKET_COL, *key_cols)
         else:
-            out_df = merged.repartition(
-                max(1, len(touched)), F.col(BUCKET_COL)
-            ).sortWithinPartitions(*key_cols)
+            out_df = cluster_by_bucket(merged, len(touched), key_cols)
         (
             out_df.write.mode("overwrite")
             .partitionBy(BUCKET_COL)
@@ -826,9 +851,7 @@ class SnapshotParquetTable:
             # clustering always survives to the delta write
             out_df = delta.sortWithinPartitions(BUCKET_COL, *key_cols)
         else:
-            out_df = delta.repartition(
-                n_buckets, F.col(BUCKET_COL)
-            ).sortWithinPartitions(*key_cols)
+            out_df = cluster_by_bucket(delta, n_buckets, key_cols)
         (
             out_df.write.mode("overwrite")
             .partitionBy(BUCKET_COL)
@@ -909,8 +932,7 @@ class SnapshotParquetTable:
         rel_data = os.path.join("data", f"v{new_version:09d}")
         out_path = os.path.join(self.root, rel_data)
         (
-            resolved.repartition(max(1, len(todo)), F.col(BUCKET_COL))
-            .sortWithinPartitions(*m["key_cols"])
+            cluster_by_bucket(resolved, len(todo), m["key_cols"])
             .write.mode("overwrite")
             .partitionBy(BUCKET_COL)
             .parquet(out_path)

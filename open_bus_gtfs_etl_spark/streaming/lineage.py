@@ -69,8 +69,11 @@ class LineageLog:
 
     def record(self, batch_id: int, stat: dict, error: str | None = None) -> None:
         """Append lineage rows for one merge. ``stat`` is the dict
-        returned by ``apply_batch`` / ``LakeTable.merge``. Driver-side
-        pyarrow write (temp + atomic rename): no Spark job."""
+        returned by ``apply_batch`` / ``LakeTable.merge``; its
+        ``started_at``/``completed_at`` (set by ``apply_batch``) are
+        stored, and either one missing (a rejected segment, a bare
+        ``merge``) falls back to now. Driver-side pyarrow write (temp +
+        atomic rename): no Spark job."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -78,8 +81,8 @@ class LineageLog:
         ts = datetime.now(timezone.utc).replace(tzinfo=None)
         base = {
             "batch_id": int(batch_id),
-            "started_at": ts,
-            "completed_at": ts,
+            "started_at": stat.get("started_at") or ts,
+            "completed_at": stat.get("completed_at") or ts,
             "success": error is None and not stat.get("skipped_fenced", False),
             "error": error,
         }

@@ -3,6 +3,8 @@ with brute force."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from open_bus_gtfs_etl_spark.genlog import generate_events
@@ -190,10 +192,10 @@ def test_argmax_lsn_cluster_matches_window_form(spark):
 def test_argmax_lsn_cluster_plan_single_payload_exchange(spark):
     """Plan pin for the fused tie-break: the window rides the bucket
     repartition (no exchange of its own), so between the broadcast
-    join-back and the output there is exactly ONE hash-partitioning
-    exchange, and no WindowGroupLimit (the lag form must not trigger
-    the rank-limit rewrite, whose partial phase re-sorts the payload
-    map-side)."""
+    join-back and the output there is exactly ONE exchange — the
+    by-id bucket pass-through — and no WindowGroupLimit (the lag form
+    must not trigger the rank-limit rewrite, whose partial phase
+    re-sorts the payload map-side)."""
     df = generate_events(spark, 2000, n_conv=50, seed=5, dup_rate=0.05)
     out = lww_dedup_argmax_lsn(
         df, KEYS, PAYLOAD,
@@ -202,11 +204,13 @@ def test_argmax_lsn_cluster_plan_single_payload_exchange(spark):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     # exactly one exchange carries the payload (the bucket repartition
-    # the write reuses); the second hashpartitioning in the plan is the
+    # the write reuses); the one hashpartitioning in the plan is the
     # winner-stats aggregation's keys+longs shuffle below the broadcast
-    assert plan.count("Exchange hashpartitioning(_bucket") == 1, plan
+    passthrough = "Exchange shufflepartitionidpassthrough(direct_shuffle_partition_id(_bucket"
+    assert plan.count(passthrough) == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert len(re.findall(r"\bExchange ", plan)) == 2, plan  # not Broadcast
     assert "hashpartitioning(lsn" not in plan, plan
-    assert plan.count("Exchange hashpartitioning") == 2, plan
     assert "WindowGroupLimit" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
 
